@@ -23,11 +23,16 @@ import org.apache.spark.sql.functions._
   *   - The seed rows themselves (level 0) are not emitted.
   *
   * Execution model / scale design:
-  *   - The edge table is the big, reused side: it is `.cache()`d once
-  *     (Spark's cache manager dedupes by logical plan, so repeated calls over
-  *     the same edges reuse one materialization). Each per-level join then
+  *   - The edge table is the big, reused side. Edges that must be computed
+  *     (parquet scans, joins, aggregates) are persisted once (Spark's cache
+  *     manager dedupes by logical plan, so repeated calls over the same
+  *     edges reuse one materialization). Edges that are already in memory —
+  *     only projections and filters over a checkpoint or a local relation,
+  *     e.g. a settled CDC snapshot — are read in place: a second copy would
+  *     cost one build per fresh snapshot, one job per cache reference under
+  *     AQE, and a cached table nothing releases. Each per-level join then
   *     broadcasts the frontier when it fits (a shuffle-free broadcast-hash
-  *     join probing the cache in place) or shuffles the frontier — the
+  *     join probing the edges in place) or shuffles the frontier — the
   *     smaller side — under AQE.
   *   - Each level's OUTPUT is lazily cached while the frontier is believed
   *     big, so every level is computed exactly once: without this, UNION
@@ -92,7 +97,8 @@ object Traverse {
     require(reserved.isEmpty,
       s"edge payload / seed carry columns collide with reserved output columns ($nodeCol, lvl): $reserved")
 
-    // Cache the reused side once; rename join columns to avoid capture.
+    // Cache the reused side once unless it is already in memory
+    // (inMemory); rename join columns to avoid capture.
     // Registered so callers can release it after materializing the result
     // (graft.CacheRegistry.releaseAll) — long-lived sessions would
     // otherwise accumulate cached edge tables.
@@ -113,11 +119,13 @@ object Traverse {
     // capture saw the flagship traversal degrade 9x mid-run at 20.9 GB
     // RSS exactly that way. Disk-backed blocks degrade to a re-read
     // instead of a re-derivation.
-    val e = graft.CacheRegistry.register(
-      edges
-        .withColumnRenamed(parentCol, "__parent")
-        .withColumnRenamed(childCol, "__child")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val renamed = edges
+      .withColumnRenamed(parentCol, "__parent")
+      .withColumnRenamed(childCol, "__child")
+    val e =
+      if (inMemory(edges)) renamed
+      else graft.CacheRegistry.register(
+        renamed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
     // Carry columns pass through unchanged except `path`, which extends
     // with the newly reached node on every step.
@@ -223,6 +231,22 @@ object Traverse {
       lvl += 1
     }
     levels.result().reduce(_ union _) // UNION ALL — bag semantics, like the reference
+  }
+
+  /** True when `df` is only deterministic projections, filters and aliases
+    * over in-memory leaves: a materialized checkpoint (`LogicalRDD`) or a
+    * `LocalRelation`. Scanning such a plan reads memory and recomputes
+    * nothing costly, so [[expand]] does not cache it again.
+    */
+  private def inMemory(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    df.queryExecution.analyzed.find {
+      case r: org.apache.spark.sql.execution.LogicalRDD => !r.rdd.isCheckpointed
+      case _: LocalRelation | _: SubqueryAlias => false
+      case p: Project => !p.projectList.forall(_.deterministic)
+      case f: Filter => !f.condition.deterministic
+      case _ => true
+    }.isEmpty
   }
 
   /** Count of walks where an `expectTinyFrontier` hint was contradicted by

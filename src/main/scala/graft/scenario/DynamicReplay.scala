@@ -79,6 +79,9 @@ object DynamicReplay {
     * analyzer sees and the work each traversal level does. The
     * materialization cost is charged INSIDE the step (eager
     * checkpoint), so cycle timings still include the write path.
+    * [[Snapshot.settle]] also holds the partition count to the previous
+    * snapshot's (or the default parallelism): a rewire step's anti-join +
+    * union would otherwise add the new edges' partitions every step.
     *
     * Every settled snapshot is registered with [[CacheRegistry]]: a
     * replay settles one snapshot per step and the result rows stay lazy
@@ -91,8 +94,8 @@ object DynamicReplay {
     * flat at 2× its headline steady state) paid for the lost execution
     * memory.
     */
-  private def settle(mutated: DataFrame): DataFrame =
-    graft.CacheRegistry.register(mutated.localCheckpoint())
+  private def settle(mutated: DataFrame, before: DataFrame): DataFrame =
+    graft.CacheRegistry.register(Snapshot.settle(mutated, before))
 
   /** Delegation snapshot as (parent, child) edges for [[Traverse.expand]]. */
   def edges(delegation: DataFrame): DataFrame =
@@ -125,7 +128,7 @@ object DynamicReplay {
     var delegation = baseDelegation(spark, sfDir)
     val rows = depths.zipWithIndex.map { case (depth, i) =>
       val step = i + 1
-      delegation = settle(mutateStep(delegation, step))
+      delegation = settle(mutateStep(delegation, step), delegation)
       chainCount(spark, delegation, depth)
         .select(lit(step).as("step"), lit(depth).as("depth"), col("n"))
     }
@@ -141,7 +144,7 @@ object DynamicReplay {
     var delegation = baseDelegation(spark, sfDir)
     val rows = cycle.zipWithIndex.map { case (depth, i) =>
       val step = i + 1
-      delegation = settle(mutateStep(delegation, step))
+      delegation = settle(mutateStep(delegation, step), delegation)
       chainCount(spark, delegation, depth)
         .select(lit(step).as("step"), lit(depth).as("depth"), col("n"))
     }
@@ -173,7 +176,7 @@ object DynamicReplay {
         .filter(col("c_custkey") % modulo === step)
         .select(col("c_custkey").cast("string").as("child"))
       val newEdges = batch.select(lit("HQ").as("parent"), col("child"))
-      e = settle(Snapshot.rewire(e, batch, newEdges))
+      e = settle(Snapshot.rewire(e, batch, newEdges), e)
       Traverse.expand(Seq("HQ").toDF("node"), e, maxDepth = depth,
           expectTinyFrontier = true) // bounded-fanout forest, see chainCount
         .agg(count(lit(1)).as("n"))

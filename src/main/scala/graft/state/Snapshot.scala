@@ -61,6 +61,21 @@ object Snapshot {
     edges.join(batch, batch.columns.toSeq, "left_anti").unionByName(newEdges)
       .select(edges.columns.map(col).toIndexedSeq: _*) // keep input column order
 
+  /** Settle the next snapshot: coalesce `merged` to at most
+    * max(partitions of `before`, the session's default parallelism), then
+    * materialize it with an eager localCheckpoint (lineage truncated, plan
+    * depth bounded). An anti-join + union merge ([[rewire]], the CDC sink's
+    * merge) keeps every partition of `before` and appends the delta's, so
+    * without the coalesce a settled snapshot gains a partition per merge
+    * and every later scan of it runs one more task. The coalesce is
+    * narrow: it adds no shuffle, and it never raises the partition count.
+    */
+  def settle(merged: DataFrame, before: DataFrame): DataFrame = {
+    val target = math.max(before.queryExecution.toRdd.getNumPartitions,
+      merged.sparkSession.sparkContext.defaultParallelism)
+    merged.coalesce(target).localCheckpoint(true)
+  }
+
   /** M13: full three-clause MERGE — the `MERGE INTO target USING source ON
     * keys` statement a transactional lakehouse table executes:
     * `WHEN MATCHED AND deleteWhen THEN DELETE` /

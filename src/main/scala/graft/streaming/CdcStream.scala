@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.Debezium
+import graft.state.Snapshot
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,6 +28,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (last-writer-wins window); the snapshot merge is an anti-join on the
   * key, broadcast when the batch is chunk-sized. State never lives in the
   * driver. With a transactional table format the merge maps to MERGE INTO.
+  * The merge's union keeps every snapshot partition and appends the
+  * batch's upserts as partitions of their own, so a plain checkpoint
+  * would gain a partition per micro-batch and every scan of the snapshot
+  * (the merge's anti-join, each chain-count level) would run one more
+  * task per batch. [[SnapshotHandle]] settles each merge through
+  * [[graft.state.Snapshot.settle]] instead: a narrow coalesce to
+  * max(previous partition count, default parallelism), then the
+  * checkpoint, so the per-batch cost stays constant.
   */
 object CdcStream {
 
@@ -139,9 +148,9 @@ object CdcStream {
      else writer).start()
   }
 
-  /** Snapshot holder for the local/foreachBatch sink. localCheckpoint after
-    * each merge keeps the plan from growing across micro-batches (the
-    * streaming analog of the recursion-loop lineage truncation).
+  /** Snapshot holder for the local/foreachBatch sink. Each merge is settled
+    * by [[graft.state.Snapshot.settle]], so neither the plan nor the
+    * partition count grows across micro-batches.
     */
   final class SnapshotHandle(spark: SparkSession) {
     import org.apache.spark.sql.types.StructType
@@ -149,7 +158,7 @@ object CdcStream {
     @volatile private var current: DataFrame =
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     def get(s: SparkSession): DataFrame = current
-    def set(df: DataFrame): Unit = current = df.localCheckpoint(true)
+    def set(df: DataFrame): Unit = current = Snapshot.settle(df, current)
     def snapshot: DataFrame = current
   }
 

@@ -127,6 +127,31 @@ class TraverseSpec extends AnyFunSuite {
     graft.CacheRegistry.releaseAll()
   }
 
+  test("edges already in memory are not cached again; parquet edges are") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-edges").toString
+    val pairs = (1 to 40).map(i => (s"n${i / 3}", s"n$i"))
+    pairs.toDF("parent", "child").write.mode("overwrite").parquet(dir)
+    val fromParquet = spark.read.parquet(dir)
+    val fromCheckpoint = fromParquet.localCheckpoint(true)
+      .select($"parent", $"child")
+    def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    def walk(e: org.apache.spark.sql.DataFrame) = {
+      CacheRegistry.releaseAll()
+      val before = stored
+      val out = Traverse.expand(Seq("n0").toDF("node"), e, maxDepth = 4,
+        expectTinyFrontier = true)
+        .select("node", "lvl").as[(String, Int)].collect().sorted.toSeq
+      (out, CacheRegistry.size, (stored -- before).size)
+    }
+    val (inMem, inMemRegs, inMemStored) = walk(fromCheckpoint)
+    assert(inMemRegs == 0, "a checkpointed edge table must not be re-cached")
+    assert(inMemStored == 0, "no new RDD may appear in storage")
+    val (cached, cachedRegs, _) = walk(fromParquet)
+    assert(cachedRegs == 1, "parquet edges keep exactly one edge cache")
+    assert(inMem == cached && inMem.nonEmpty)
+    CacheRegistry.releaseAll()
+  }
+
   test("early exit stops at fixpoint before the bound") {
     val e = edges("a" -> "b")
     val out = Traverse.expand(Seq("a").toDF("node"), e, maxDepth = 100,
